@@ -579,19 +579,8 @@ object SparkEntry {
         val linkedV = graft.link.EntityLinker.canonicalize(s, variantDim, threshold = 0.7)
         val canonV = graft.link.EntityLinker.canonicalizeTriples(raw, linkedV)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // one-pass multiset difference count (the q53 idiom, one-sided):
-        // |canonV \ raw| over multisets is sum over distinct rows of
-        // max(0, countV - countRaw) — one aggregation per side + a join
-        // instead of exceptAll's union + aggregate + generate replication
-        val keyCols = canonV.columns.toSeq
-        val chV = canonV.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__cv"))
-          .join(
-            raw.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__cr")),
-            keyCols, "left")
-          .agg(coalesce(
-            sum(greatest(col("__cv") - coalesce(col("__cr"), lit(0L)), lit(0L))),
-            lit(0L)).as("d"))
-          .as[Long].head()
+        // |canonV \ raw| over multisets, in one pass per side
+        val chV = graft.ops.Multiset.diffCount(canonV, raw)
         val dgV = canonV
           .agg(contentDigest(col("subj"), col("pred"), col("obj"), col("url")).as("d"))
           .as[Long].head()
@@ -871,19 +860,9 @@ object SparkEntry {
       val streamed = graft.streaming.TripleStream.readTriples(s, outDir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nStream = streamed.count()
-      // one-pass multiset symmetric difference: |A\B| + |B\A| over
-      // multisets is sum over distinct rows of |countA - countB| — the
-      // same value the two exceptAll legs computed, with one aggregation
-      // per side instead of two generate+agg+join chains
-      val keyCols = streamed.columns.toSeq
-      val symDiff = streamed.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__ca"))
-        .join(
-          batch.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("__cb")),
-          keyCols, "full_outer")
-        .agg(coalesce(
-          sum(abs(coalesce(col("__ca"), lit(0L)) - coalesce(col("__cb"), lit(0L)))),
-          lit(0L)).as("d"))
-        .as[Long].head()
+      // |A\B| + |B\A| over multisets — the value the two exceptAll legs
+      // computed, with one aggregation per side
+      val symDiff = graft.ops.Multiset.diffCount(streamed, batch, symmetric = true)
       streamed.unpersist(); batch.unpersist()
       Seq(
         ("n_stream_triples", nStream),

@@ -23,10 +23,6 @@ object PyText {
       c == '\u2028' || c == '\u2029' || c == '\u202f' ||
       c == '\u205f' || c == '\u3000'
 
-  /** Java-regex char class matching exactly the CPython whitespace set.
-    * Use with the (?U) inline flag so `\s` covers Unicode White_Space. */
-  val SpaceClass = "[\\s\\x1c-\\x1f]"
-
   /** CPython str.strip() — strips isspace() chars from both ends. */
   def pyStrip(s: String): String = {
     var i = 0

@@ -6,7 +6,7 @@ import graft.GraftSession
 import graft.fixtures.Corpus
 
 /** Runtime smoke: drives the Catalyst expression path (text_norm /
-  * assemble_article / clean_sent) through a real SparkSession over the
+  * assemble_article) through a real SparkSession over the
   * generated corpus and prints plan + sample rows. Run:
   *   sbt "runMain graft.tools.Smoke"
   */
