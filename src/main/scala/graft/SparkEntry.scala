@@ -619,9 +619,9 @@ object SparkEntry {
         // dims are never consumed on the pair-scoring path — skip the
         // window-text dictionary's groupBy + rank probe
         minCount = 2, minPoolSize = 2, needDims = false)
-      val poolId = col("e1_id") * lit(1000000L) + col("e2_id")
       val embedded = graft.kernel.PairScoring.embed(
-        s, ds.tokenizedRelations.withColumn("pool_id", poolId))
+        s, ds.tokenizedRelations.withColumn("pool_id",
+          graft.kernel.PairScoring.poolId(col("e1_id"), col("e2_id"))))
       // pinned evidence (round-3 VERDICT "What's missing" #1): every pair
       // score is computed for real, then count + an order-independent
       // digest over the canonical (pool, rid_a, rid_b, score@6dp) rows is
@@ -653,9 +653,9 @@ object SparkEntry {
         sc.broadcast(new Gazetteer(FixtureVocab.AllEntities)),
         sc.broadcast(Vocab.fixtureTokenizer),
         minCount = 2, minPoolSize = 2, needDims = false)
-      val poolId = col("e1_id") * lit(1000000L) + col("e2_id")
       val losses = graft.kernel.PairScoring.embed(
-        s, ds.tokenizedRelations.withColumn("pool_id", poolId))
+        s, ds.tokenizedRelations.withColumn("pool_id",
+          graft.kernel.PairScoring.poolId(col("e1_id"), col("e2_id"))))
         .as[(Long, Long, Array[Float])]
         .groupByKey(_._1)
         .mapGroups { (pool, it) =>

@@ -1,6 +1,6 @@
 package graft.kernel
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Similarity
@@ -15,6 +15,15 @@ import graft.ops.Similarity
   * hash-partitioned on pool id with partial aggregation; no driver loops.
   */
 object PairScoring {
+
+  /** Pool key of an (e1_id, e2_id) entity pair: e1_id * 1e6 + e2_id. The
+    * pack is injective only while e2_id lies in [0, 1e6), so an e2_id
+    * outside that range raises instead of silently aliasing another
+    * pair's pool. */
+  def poolId(e1: Column, e2: Column): Column =
+    when(e2 < 0 || e2 >= 1000000L,
+      raise_error(format_string("pool_id: e2_id %s outside [0, 1000000)", e2)))
+      .otherwise(e1 * lit(1000000L) + e2)
 
   /** All within-pool ordered pairs scored by cosine.
     * @param embedded (pool_id: long, relation_id: long, emb: array<float>) */

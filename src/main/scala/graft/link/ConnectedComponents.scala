@@ -3,6 +3,8 @@ package graft.link
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.BoundedDriver
+
 /** Connected components over the mention/similarity graph — iterative
   * DataFrame min-label propagation (alternating join + min-aggregate until
   * fixpoint), the GraphFrames-free formulation from SURVEY.md §4. Each
@@ -36,14 +38,11 @@ object ConnectedComponents {
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // the probe IS the collect (q26/EntityLinker idiom): ONE bounded job —
-    // limit(T+1) rows — decides the regime AND, in the small-graph case,
-    // already holds the full edge set (a T+1st row proves the graph is
-    // fact-sized and the rows are discarded, ≤ ~80 MB paid only then)
     import spark.implicits._
-    val probe = sym.as[(Long, Long)].limit((collectThreshold + 1).toInt).collect()
-    if (probe.length <= collectThreshold)
-      return smallGraph(spark, probe)
+    BoundedDriver.collectUpTo(sym.as[(Long, Long)], collectThreshold) match {
+      case Some(local) => return smallGraph(spark, local)
+      case None =>
+    }
 
     var labels = sym
       .select(col("src").as("node"))

@@ -3,6 +3,8 @@ package graft.link
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.BoundedDriver
+
 /** Entity canonicalization: MinHash/LSH blocking → similarity edges →
   * connected components → canonical id/surface per cluster (north_star
   * "entity linking with MinHash/LSH candidate blocking plus
@@ -20,10 +22,10 @@ object EntityLinker {
     * fixed overhead dwarfs the work when the entity dim is small — which
     * it usually is, since dims ≪ facts even at web scale. Below
     * `smallDimThreshold` surfaces the whole chain runs on the driver with
-    * the IDENTICAL hash/band/cap/verify constants (one bounded
-    * limit-collect, same regime trick as ConnectedComponents.run), and the
-    * result comes back as a LocalRelation that downstream joins broadcast
-    * for free. Above it, the distributed path runs unchanged. */
+    * the IDENTICAL hash/band/cap/verify constants (one
+    * [[BoundedDriver.collectUpTo]] job), and the result comes back as a
+    * LocalRelation that downstream joins broadcast for free. Above it, the
+    * distributed path runs unchanged. */
   def canonicalize(
       spark: SparkSession,
       eDimIn: DataFrame,
@@ -31,18 +33,13 @@ object EntityLinker {
       numHashes: Int = 48,
       bands: Int = 16,
       smallDimThreshold: Int = 100000): DataFrame = {
-    // the probe IS the collect (q26 pattern): pull up to threshold+1 rows
-    // in ONE job — an overflow row proves the dim is big and the rows are
-    // discarded (≤ a few MB, paid only in the rare big-dim case), while
-    // the common small-dim case no longer evaluates its input twice (the
-    // old limit+count then collect re-ran the caller's union/distinct
-    // chain per probe)
     val dimSlim = eDimIn.select(col("e_id").cast("long"), col("e_text"))
-    val probe = dimSlim.limit(smallDimThreshold + 1).collect()
-    if (probe.length <= smallDimThreshold) {
-      return localCanonicalize(
-        spark, probe.map(r => (r.getLong(0), r.getString(1))),
-        threshold, numHashes, bands)
+    BoundedDriver.collectUpTo(dimSlim, smallDimThreshold) match {
+      case Some(local) =>
+        return localCanonicalize(
+          spark, local.map(r => (r.getLong(0), r.getString(1))),
+          threshold, numHashes, bands)
+      case None =>
     }
 
     // five consumers (LSH sigs + two text joins + comp join + canon agg);

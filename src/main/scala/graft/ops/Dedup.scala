@@ -240,17 +240,14 @@ object Dedup {
     // regime split, same shape as EntityLinker.canonicalize: the
     // distributed chain launches ~8 jobs (two sig flatMaps, bucket join,
     // pair distinct, two vector join-backs, CC probe, final link join)
-    // whose fixed constants dwarf the work below ~100k vectors. The probe
-    // IS the collect (one job total): pull up to threshold+1 rows — an
-    // overflow row proves the corpus is big and the rows are discarded —
-    // then run the IDENTICAL sig/probe/verify/CC constants locally.
-    val probe = base.limit(smallTableThreshold + 1).as[(Long, Array[Float])].collect()
-    if (probe.length <= smallTableThreshold) {
-      localEmbeddingClusters(spark, probe, threshold, nBits, tables, idCol,
-        maxLocalCandidatePairs) match {
-        case Some(df) => return df
-        case None => () // pair-volume guard tripped: distribute instead
-      }
+    // whose fixed constants dwarf the work below ~100k vectors; the local
+    // regime runs the IDENTICAL sig/probe/verify/CC constants. None from
+    // the local regime means its pair-volume guard tripped: distribute.
+    BoundedDriver.collectUpTo(base.as[(Long, Array[Float])], smallTableThreshold)
+      .flatMap(localEmbeddingClusters(spark, _, threshold, nBits, tables, idCol,
+        maxLocalCandidatePairs)) match {
+      case Some(df) => return df
+      case None =>
     }
     // distributed regime: persist the (id, vec) projection so the two
     // signature flatMaps, the two vector join-backs and the final id list

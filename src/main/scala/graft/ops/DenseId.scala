@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{IntegerType, LongType, ShortType, StructType}
 
 /** Dense contiguous ids 0..n-1 in a global sort order WITHOUT a
   * partition-less ranking window (which funnels every row through one task
@@ -22,10 +25,6 @@ import org.apache.spark.sql.types.LongType
 object DenseId {
 
   def withDenseId(df: DataFrame, idName: String, orderCols: Column*): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-
     val spark = df.sparkSession
     val numParts = spark.sessionState.conf.numShufflePartitions
     val sorted = df
@@ -49,165 +48,75 @@ object DenseId {
     GraftBridge.internalDF(spark, rdd, schema)
   }
 
-  /** Dense ids via a BOUNDED DRIVER RANKING regime (the EntityLinker /
-    * embedding-dedup probe idiom applied to id assignment): one
-    * column-pruned pass collects only the (k1, k2) key pairs — the fat
-    * payload (token arrays) never moves — and, when the key count is
-    * within maxDriverKeys, the global rank is computed on the driver and
-    * shipped back as a broadcast sorted-key table each executor
+  /** Dense ids via a BOUNDED DRIVER RANKING regime (the
+    * [[BoundedDriver.collectUpTo]] idea applied to id assignment): one
+    * column-pruned pass collects only the keys, packed into one long each
+    * (the fat payload, e.g. token arrays, never moves), and when the key
+    * count is within `maxDriverKeys` the global rank is computed on the
+    * driver and shipped back as a broadcast sorted-key table each executor
     * binary-searches. That removes the range exchange, its
     * RangePartitioner sample pass, the per-partition sort AND
     * zipWithIndex's offsets job: the one slim pass is the whole id
     * assignment. The default bound (32M keys = 256 MB packed) is a
-    * driver-memory/broadcast budget, same order as the engine's other
-    * bounded regimes (CC <= 5M edges, linker <= 100k rows); above it
-    * (true web-scale fact tables) it falls back to withDenseId, whose
-    * range exchange is the correct distributed shape at that size — the
-    * wasted probe is one pruned scan, a rounding error against the fat
-    * exchange it would otherwise always pay.
+    * driver-memory/broadcast budget; above it (true web-scale fact
+    * tables) it falls back to withDenseId, whose range exchange is the
+    * correct distributed shape at that size. Each partition ships at most
+    * its share of the bound, so the driver never receives more than about
+    * `maxDriverKeys` keys; a skewed partition that passes its share just
+    * falls back early.
     *
-    * The assigned ids equal the row's rank in the global (k1, k2) order —
-    * bit-identical to withDenseId (given unique key pairs, which every
-    * call site guarantees). Requires a DETERMINISTIC input lineage (ours
-    * are; the fact path is persisted): the key pass and the attach pass
-    * must iterate partitions in the same row order. */
+    * `keys` lists the order columns, most significant first, each with
+    * its packing width in bits: a key must lie in [0, 2^width), and the
+    * widths sum to at most 63, so packing is order-preserving. The call
+    * sites use 31/31 (docOrd, pairOrd) and 31/15/16 (doc_id plus two
+    * token positions inside one document). Packing keeps the driver side
+    * primitive: sorting 2.6M boxed tuples measured ~5 s single-threaded,
+    * where Arrays.parallelSort of packed longs is ~0.1 s. A NULL,
+    * out-of-range or duplicate key falls back to withDenseId too: reading
+    * NULL as 0 would rank a wrong-but-plausible (0, y) key instead of
+    * withDenseId's NULLS-FIRST order, and duplicates would alias to one
+    * rank under binary search.
+    *
+    * The assigned ids equal the row's rank in the global key order —
+    * bit-identical to withDenseId (given unique keys, which every call
+    * site guarantees). Requires a value-deterministic input lineage (ours
+    * are; the fact path is persisted): the attach pass must see the keys
+    * the key pass ranked. */
   def withDenseIdProbed(
       df: DataFrame,
       idName: String,
-      k1: String,
-      k2: String,
+      keys: Seq[(String, Int)],
       maxDriverKeys: Long = 32000000L): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    import org.apache.spark.sql.functions.col
-
+    val widths = keys.map(_._2).toArray
+    require(widths.forall(_ > 0) && widths.sum <= 63,
+      s"key widths ${widths.mkString("/")} must be positive and sum to at most 63")
+    def fallback = withDenseId(df, idName, keys.map(k => col(k._1)): _*)
     val spark = df.sparkSession
-    // slim key pass: both keys packed into one long (each guarded to
-    // [0, 2^31) — true of every call site: docOrds are line ordinals or
-    // 31-bit hashes, pairOrds are small ints). Packing keeps the driver
-    // side primitive: sorting 2.6M boxed (Long, Long) tuples measured ~5 s
-    // single-threaded — a constant that lands on BOTH scaling legs —
-    // where Arrays.parallelSort of packed longs is ~0.1 s.
-    // A NULL key forces the classic-path fallback too (ok=false): reading
-    // it as 0 would silently pack a valid (0, y) key and assign a
-    // wrong-but-plausible rank instead of withDenseId's NULLS-FIRST order.
-    val keyed = df.select(col(k1).cast(LongType), col(k2).cast(LongType))
-    val Lim = 1L << 31
-    def pack(a: Long, b: Long): Long = (a << 31) | b
-    val perPart = keyed.queryExecution.toRdd
+
+    val keyed = df.select(keys.map(k => col(k._1).cast(LongType)): _*)
+    val keyIdx = widths.indices.toArray
+    val keyRead = keyIdx.map(longReader(keyed.schema, _))
+    val keyRdd = keyed.queryExecution.toRdd
+    val parts = math.max(1, keyRdd.getNumPartitions)
+    val share = (maxDriverKeys + parts - 1) / parts
+    val perPart = keyRdd
       .mapPartitions { it =>
         val a = new scala.collection.mutable.ArrayBuilder.ofLong
         var ok = true
-        it.foreach { r =>
-          if (r.isNullAt(0) || r.isNullAt(1)) ok = false
-          else {
-            val x = r.getLong(0); val y = r.getLong(1)
-            if (x < 0 || x >= Lim || y < 0 || y >= Lim) ok = false
-            else a += pack(x, y)
-          }
+        while (ok && it.hasNext) {
+          val k = packKeys(it.next(), keyIdx, keyRead, widths)
+          if (k < 0 || a.length >= share) ok = false
+          else a += k
         }
-        Iterator.single((ok, a.result()))
+        Iterator.single((ok, if (ok) a.result() else Array.emptyLongArray))
       }
       .collect()
     val total = perPart.iterator.map(_._2.length.toLong).sum
-    if (!perPart.forall(_._1) || total > maxDriverKeys)
-      return withDenseId(df, idName, col(k1), col(k2))
+    if (!perPart.forall(_._1) || total > maxDriverKeys) return fallback
 
-    // global rank = position in the sorted packed-key array (packing is
-    // order-preserving for non-negative 31-bit keys). The sorted array is
-    // broadcast and each executor binary-searches its own rows' ranks —
-    // no positional alignment between passes is needed, so the input
-    // lineage only has to be value-deterministic, not order-stable.
-    val sortedKeys = new Array[Long](total.toInt)
-    var off = 0
-    perPart.foreach { case (_, a) =>
-      System.arraycopy(a, 0, sortedKeys, off, a.length); off += a.length
-    }
-    java.util.Arrays.parallelSort(sortedKeys)
-    // duplicate keys would alias to one rank via binary search (the
-    // range-exchange path gives ties distinct arbitrary ranks instead) —
-    // ranks are only well-defined under a total order, so fall back
-    var d = 1
-    while (d < sortedKeys.length && sortedKeys(d - 1) != sortedKeys(d)) d += 1
-    if (d < sortedKeys.length) return withDenseId(df, idName, col(k1), col(k2))
-
-    val bc = spark.sparkContext.broadcast(sortedKeys)
-    val schema = df.schema.add(idName, LongType, nullable = false)
-    val i1 = df.schema.fieldIndex(k1)
-    val i2 = df.schema.fieldIndex(k2)
-    def longReader(idx: Int): InternalRow => Long =
-      df.schema(idx).dataType match {
-        case LongType                             => _.getLong(idx)
-        case org.apache.spark.sql.types.IntegerType => _.getInt(idx).toLong
-        case org.apache.spark.sql.types.ShortType => _.getShort(idx).toLong
-        case other =>
-          throw new IllegalArgumentException(s"non-integral key column $other")
-      }
-    val r1 = longReader(i1)
-    val r2 = longReader(i2)
-    val rdd = df.queryExecution.toRdd.mapPartitions { it =>
-      val keys = bc.value
-      val idRow = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      it.map { row =>
-        // the key pass saw no NULLs (it would have fallen back) — a NULL
-        // here means the input lineage changed between passes
-        require(!row.isNullAt(i1) && !row.isNullAt(i2),
-          "NULL key in the attach pass after a null-free key pass — non-deterministic input lineage")
-        val rank = java.util.Arrays.binarySearch(keys, pack(r1(row), r2(row)))
-        require(rank >= 0, "key pair missing from the rank table — non-deterministic input lineage")
-        idRow.update(0, rank.toLong)
-        joined(row, idRow): InternalRow
-      }
-    }
-    GraftBridge.internalDF(spark, rdd, schema)
-  }
-
-  /** Three-key variant of [[withDenseIdProbed]] for (docOrd, p1, p2)-style
-    * orders: the keys pack order-preservingly into one long when
-    * k1 ∈ [0, 2^31), k2 ∈ [0, 2^15), k3 ∈ [0, 2^16) — true of the mention
-    * call sites, where k2/k3 are token positions inside one document.
-    * Any out-of-range or NULL key falls back to the classic
-    * range-exchange path, whose ids are identical by construction. */
-  def withDenseIdProbed3(
-      df: DataFrame,
-      idName: String,
-      k1: String,
-      k2: String,
-      k3: String,
-      maxDriverKeys: Long = 32000000L): DataFrame = {
-    import org.apache.spark.sql.GraftBridge
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-    import org.apache.spark.sql.functions.col
-
-    val spark = df.sparkSession
-    val keyed = df.select(
-      col(k1).cast(LongType), col(k2).cast(LongType), col(k3).cast(LongType))
-    val Lim1 = 1L << 31
-    val Lim2 = 1L << 15
-    val Lim3 = 1L << 16
-    def pack(a: Long, b: Long, c: Long): Long = (a << 31) | (b << 16) | c
-    val perPart = keyed.queryExecution.toRdd
-      .mapPartitions { it =>
-        val a = new scala.collection.mutable.ArrayBuilder.ofLong
-        var ok = true
-        it.foreach { r =>
-          if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) ok = false
-          else {
-            val x = r.getLong(0); val y = r.getLong(1); val z = r.getLong(2)
-            if (x < 0 || x >= Lim1 || y < 0 || y >= Lim2 || z < 0 || z >= Lim3) ok = false
-            else a += pack(x, y, z)
-          }
-        }
-        Iterator.single((ok, a.result()))
-      }
-      .collect()
-    val total = perPart.iterator.map(_._2.length.toLong).sum
-    if (!perPart.forall(_._1) || total > maxDriverKeys)
-      return withDenseId(df, idName, col(k1), col(k2), col(k3))
-
+    // global rank = position in the sorted packed-key array. The sorted
+    // array is broadcast and each executor binary-searches its own rows'
+    // ranks — no positional alignment between passes is needed
     val sortedKeys = new Array[Long](total.toInt)
     var off = 0
     perPart.foreach { case (_, a) =>
@@ -216,37 +125,54 @@ object DenseId {
     java.util.Arrays.parallelSort(sortedKeys)
     var d = 1
     while (d < sortedKeys.length && sortedKeys(d - 1) != sortedKeys(d)) d += 1
-    if (d < sortedKeys.length) return withDenseId(df, idName, col(k1), col(k2), col(k3))
+    if (d < sortedKeys.length) return fallback
 
     val bc = spark.sparkContext.broadcast(sortedKeys)
     val schema = df.schema.add(idName, LongType, nullable = false)
-    val i1 = df.schema.fieldIndex(k1)
-    val i2 = df.schema.fieldIndex(k2)
-    val i3 = df.schema.fieldIndex(k3)
-    def longReader(idx: Int): InternalRow => Long =
-      df.schema(idx).dataType match {
-        case LongType                               => _.getLong(idx)
-        case org.apache.spark.sql.types.IntegerType => _.getInt(idx).toLong
-        case org.apache.spark.sql.types.ShortType   => _.getShort(idx).toLong
-        case other =>
-          throw new IllegalArgumentException(s"non-integral key column $other")
-      }
-    val r1 = longReader(i1)
-    val r2 = longReader(i2)
-    val r3 = longReader(i3)
+    val idx = keys.map(k => df.schema.fieldIndex(k._1)).toArray
+    val read = idx.map(longReader(df.schema, _))
     val rdd = df.queryExecution.toRdd.mapPartitions { it =>
-      val keys = bc.value
+      val table = bc.value
       val idRow = new GenericInternalRow(1)
       val joined = new JoinedRow
       it.map { row =>
-        require(!row.isNullAt(i1) && !row.isNullAt(i2) && !row.isNullAt(i3),
-          "NULL key in the attach pass after a null-free key pass — non-deterministic input lineage")
-        val rank = java.util.Arrays.binarySearch(keys, pack(r1(row), r2(row), r3(row)))
-        require(rank >= 0, "key triple missing from the rank table — non-deterministic input lineage")
+        // the key pass saw only valid keys (it would have fallen back)
+        val k = packKeys(row, idx, read, widths)
+        require(k >= 0,
+          "NULL or out-of-range key in the attach pass after a clean key pass — non-deterministic input lineage")
+        val rank = java.util.Arrays.binarySearch(table, k)
+        require(rank >= 0, "key missing from the rank table — non-deterministic input lineage")
         idRow.update(0, rank.toLong)
         joined(row, idRow): InternalRow
       }
     }
     GraftBridge.internalDF(spark, rdd, schema)
   }
+
+  /** The row's keys packed most significant first, or -1 when a key is
+    * NULL or outside [0, 2^width). */
+  private def packKeys(
+      row: InternalRow,
+      idx: Array[Int],
+      read: Array[InternalRow => Long],
+      widths: Array[Int]): Long = {
+    var acc = 0L
+    var i = 0
+    while (i < idx.length) {
+      if (row.isNullAt(idx(i))) return -1L
+      val v = read(i)(row)
+      if ((v >>> widths(i)) != 0) return -1L
+      acc = (acc << widths(i)) | v
+      i += 1
+    }
+    acc
+  }
+
+  private def longReader(schema: StructType, idx: Int): InternalRow => Long =
+    schema(idx).dataType match {
+      case LongType    => _.getLong(idx)
+      case IntegerType => _.getInt(idx).toLong
+      case ShortType   => _.getShort(idx).toLong
+      case other       => throw new IllegalArgumentException(s"non-integral key column $other")
+    }
 }

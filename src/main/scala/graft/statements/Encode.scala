@@ -53,7 +53,7 @@ object Encode {
         col("fs.docOrd").as("__d"), col("fs.pairOrd").as("__p"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     DenseId
-      .withDenseIdProbed(xFirst, "x_id", "__d", "__p")
+      .withDenseIdProbed(xFirst, "x_id", Seq("__d" -> 31, "__p" -> 31))
       .select(col("x_text"), col("x_id"))
   }
 
@@ -76,7 +76,7 @@ object Encode {
         (col("fs.pairOrd").cast("long") * 2 + col("fs.slot")).as("__p"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     DenseId
-      .withDenseIdProbed(eFirst, "e_id", "__d", "__p")
+      .withDenseIdProbed(eFirst, "e_id", Seq("__d" -> 31, "__p" -> 31))
       .select(col("e_text"), col("e_id"))
   }
 
@@ -136,7 +136,7 @@ object Encode {
     * otherwise DenseId's range exchange runs — ids are bit-identical
     * either way. */
   def withRelationIds(fact: DataFrame): DataFrame =
-    DenseId.withDenseIdProbed(fact, "relation_id", "docOrd", "pairOrd")
+    DenseId.withDenseIdProbed(fact, "relation_id", Seq("docOrd" -> 31, "pairOrd" -> 31))
 
   /** Two-phase salted list collection: a Zipfian-hot key (one entity pair
     * dominating the corpus) otherwise concentrates its entire list in a

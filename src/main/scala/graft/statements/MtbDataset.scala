@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.annotate.Gazetteer
+import graft.ops.BoundedDriver
 import graft.schema.WebPage
 import graft.tokenize.BertTokenizer
 import graft.triples.TriplePipeline
@@ -143,18 +144,15 @@ object MtbDataset {
             .groupBy(col("e1"), col("e2")).count()
             .filter(col("count") >= minKeep)
             .select(col("e1"), col("e2"))
-          // fused regime probe (the q26 pattern): ONE bounded collect —
-          // limit max+1 rows — decides the regime AND, in the broadcast
-          // regime, already holds the keep set, so the broadcast builds
-          // from a LocalRelation instead of re-running the aggregation as
-          // the join's build side
-          val cap = math.min(broadcastPairsMax + 1, Int.MaxValue.toLong).toInt
-          val local = keepPairs.limit(cap).collect()
-          if (local.length <= broadcastPairsMax) {
-            val localDf = spark.createDataFrame(
-              java.util.Arrays.asList(local: _*), keepPairs.schema)
-            fact.join(broadcast(localDf), Seq("e1", "e2"), "left_semi")
-          } else fact.join(keepPairs, Seq("e1", "e2"), "left_semi")
+          // the broadcast builds from the collected LocalRelation instead
+          // of re-running the aggregation as the join's build side
+          BoundedDriver.collectUpTo(keepPairs, broadcastPairsMax) match {
+            case Some(local) =>
+              val localDf = spark.createDataFrame(
+                java.util.Arrays.asList(local: _*), keepPairs.schema)
+              fact.join(broadcast(localDf), Seq("e1", "e2"), "left_semi")
+            case None => fact.join(keepPairs, Seq("e1", "e2"), "left_semi")
+          }
         }
       afterPool
         .mapPartitions { rows =>

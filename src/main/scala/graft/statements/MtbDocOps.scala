@@ -65,8 +65,8 @@ object MtbDocOps {
     // (doc_id, p1, p2) is a total order: mention positions are unique
     // within a document (first-occurrence per distinct surface). Bounded
     // driver rank (positions are document-local, well under the packed
-    // 2^15/2^16 bounds); the classic range exchange is the fallback.
-    DenseId.withDenseIdProbed3(filtered, "relation_id", "doc_id", "p1", "p2")
+    // 2^15/2^16 widths); the classic range exchange is the fallback.
+    DenseId.withDenseIdProbed(filtered, "relation_id", Seq("doc_id" -> 31, "p1" -> 15, "p2" -> 16))
   }
 
   final case class DocMtb(

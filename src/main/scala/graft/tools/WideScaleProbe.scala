@@ -1,46 +1,18 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import graft.statements.Encode
 
-/** Wide-op (shuffle-heavy MTB chain) scaling probe: efficiency vs corpus
-  * size, to separate per-job fixed overhead from genuine shuffle scaling.
-  * Usage: WideScaleProbe [pages ...] */
+/** Phase-timed runs of the wide (shuffle-heavy) MTB chain for the
+  * scaling legs of Bench and WideBench. */
 object WideScaleProbe {
-
-  private def session(cores: Int): SparkSession = {
-    val b = graft.GraftSession.builder(cores, s"wide-probe-$cores")
-    // PROBE_PARTITIONS: fix shuffle partitions across legs so both core
-    // counts sort/aggregate identical partition sizes (otherwise the lo
-    // leg's 4 fat partitions pay more per-partition spill, inflating eff)
-    sys.env.get("PROBE_PARTITIONS").foreach(p => b.config("spark.sql.shuffle.partitions", p))
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
-
-  def run(s: SparkSession, n: Long): Long = {
-    val sc = s.sparkContext
-    val ds = graft.statements.MtbDataset.build(
-      s, graft.fixtures.Corpus.generate(s, n),
-      sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
-      sc.broadcast(graft.tokenize.Vocab.fixtureTokenizer),
-      minCount = 2, minPoolSize = 2)
-    val c = ds.pools.count()
-    s.catalog.clearCache()
-    c
-  }
 
   /** Phase-timed single run through MtbDataset.build's probe hook — the
     * SAME stage boundaries the production build has (statements persist,
     * the two dict groupBys, the freq filter, tokenize+DenseId encode,
-    * the salted pools collect), each forced and timed in order. Returns
-    * the ordered (phase, sec) list and the pool count. */
-  def phasedRun(s: SparkSession, n: Long): (Seq[(String, Double)], Long) =
-    phasedRunOn(s, graft.fixtures.Corpus.generate(s, n))
-
-  /** Same, over a caller-supplied page set (Bench reads the shared
-    * parquet corpus so both scaling legs scan identical stored bytes). */
+    * the salted pools collect), each forced and timed in order, over a
+    * caller-supplied page set (Bench reads the shared parquet corpus so
+    * both scaling legs scan identical stored bytes). Returns the ordered
+    * (phase, sec) list and the pool count. */
   def phasedRunOn(
       s: SparkSession,
       pages: org.apache.spark.sql.Dataset[graft.schema.WebPage]): (Seq[(String, Double)], Long) = {
@@ -139,32 +111,5 @@ object WideScaleProbe {
       buf.toSeq, pools,
       cpuNs.asScala.map { case (k, v) => k -> v.toDouble / 1e9 }.toMap,
       runMs.asScala.map { case (k, v) => k -> v.toDouble / 1e3 }.toMap)
-  }
-
-  def main(args: Array[String]): Unit = {
-    val mode = sys.env.getOrElse("PROBE_MODE", "scale")
-    val sizes = if (args.nonEmpty) args.map(_.toLong).toSeq else Seq(200000L, 600000L)
-    if (mode == "phases") {
-      sizes.foreach { n =>
-        Seq(4, 16).foreach { c =>
-          val s = session(c)
-          run(s, 2000)
-          val (ph, _) = phasedRun(s, n)
-          s.stop()
-          println(f"pages=$n cores=$c total=${ph.map(_._2).sum}%.1f " +
-            ph.map { case (k, v) => f"$k=$v%.1f" }.mkString(" "))
-        }
-      }
-    } else sizes.foreach { n =>
-      val lo = session(4)
-      run(lo, 20000)
-      val t0 = System.nanoTime(); run(lo, n); val tLo = (System.nanoTime() - t0) / 1e9
-      lo.stop()
-      val hi = session(16)
-      run(hi, 20000)
-      val t1 = System.nanoTime(); run(hi, n); val tHi = (System.nanoTime() - t1) / 1e9
-      hi.stop()
-      println(f"pages=$n lo=$tLo%.1f hi=$tHi%.1f eff=${(tLo / tHi) / 4}%.3f")
-    }
   }
 }

@@ -131,49 +131,4 @@ class Round5OpsSpec extends AnyFunSuite {
     assert(a == b)
     assert(a.exists { case (m, v) => m == "n_pools" && v > 0 })
   }
-
-  // ---- DenseId bounded-driver ranking (skips the range exchange) ----
-
-  test("withDenseIdProbed == withDenseId on sorted input") {
-    import spark.implicits._
-    val base = (0 until 400).map(i => (i.toLong / 7, (i % 7).toLong, s"v$i"))
-      .toDF("d", "p", "v")
-      .repartitionByRange(4, col("d"), col("p"))
-      .sortWithinPartitions(col("d"), col("p"))
-      .persist()
-    base.count()
-    val fast = graft.ops.DenseId.withDenseIdProbed(base, "id", "d", "p")
-      .collect().map(r => (r.getString(2), r.getLong(3))).sortBy(_._1).toSeq
-    val classic = graft.ops.DenseId.withDenseId(base, "id", col("d"), col("p"))
-      .collect().map(r => (r.getString(2), r.getLong(3))).sortBy(_._1).toSeq
-    base.unpersist()
-    assert(fast == classic)
-  }
-
-  test("withDenseIdProbed ranks exactly on unsorted hash-partitioned input") {
-    import spark.implicits._
-    // hash-partitioned and shuffled key order — the driver ranking must
-    // still produce the exact global (d, p) rank
-    val base = (0 until 400).map(i => ((i * 137 % 400).toLong, (i % 3).toLong, i))
-      .toDF("d", "p", "v").repartition(4).persist()
-    base.count()
-    val got = graft.ops.DenseId.withDenseIdProbed(base, "id", "d", "p")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-    base.unpersist()
-    val expected = got.sortBy(r => (r._1, r._2)).zipWithIndex.map(_._2.toLong)
-    assert(got.sortBy(r => (r._1, r._2)).map(_._4).toSeq == expected.toSeq)
-  }
-
-  test("withDenseIdProbed over the driver-key bound falls back to the range exchange") {
-    import spark.implicits._
-    val base = (0 until 400).map(i => ((i * 211 % 400).toLong, 0L, i))
-      .toDF("d", "p", "v").repartition(4).persist()
-    base.count()
-    val capped = graft.ops.DenseId
-      .withDenseIdProbed(base, "id", "d", "p", maxDriverKeys = 10L)
-      .collect().map(r => (r.getLong(0), r.getLong(3)))
-    base.unpersist()
-    val expected = capped.sortBy(_._1).zipWithIndex.map(_._2.toLong)
-    assert(capped.sortBy(_._1).map(_._2).toSeq == expected.toSeq)
-  }
 }

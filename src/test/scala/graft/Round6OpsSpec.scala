@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.link.{ConnectedComponents, EntityLinker}
-import graft.ops.{Dedup, DenseId, IvfIndex}
+import graft.ops.{Dedup, IvfIndex}
 
 /** Round-6 forced-distributed-regime parity matrix (r5 VERDICT "Next
   * round" #2): every bounded local/broadcast regime in the engine has a
@@ -59,44 +59,6 @@ class Round6OpsSpec extends AnyFunSuite {
     def run(thr: Long) = ConnectedComponents.run(spark, edges, collectThreshold = thr)
       .orderBy("node").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(run(0L) == run(5000000L))
-  }
-
-  // ---- DenseId: bounded-driver rank vs classic range exchange ----
-
-  test("withDenseIdProbed: forced range-exchange ids equal bounded-rank ids") {
-    import spark.implicits._
-    val rng = new java.util.Random(7)
-    val rows = (0 until 500).map { i =>
-      (rng.nextInt(1 << 20).toLong * 500 + i, rng.nextInt(1000), s"payload-$i")
-    }
-    val df = rows.toDF("d", "p", "payload")
-    def run(max: Long) = DenseId.withDenseIdProbed(df, "id", "d", "p", maxDriverKeys = max)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(3))).toSeq
-    assert(run(0L) == run(32000000L)) // max=0 forces withDenseId's range exchange
-  }
-
-  test("withDenseIdProbed3: forced range-exchange ids equal bounded-rank ids") {
-    import spark.implicits._
-    val rng = new java.util.Random(8)
-    val rows = (0 until 400).map { i =>
-      (rng.nextInt(1 << 20).toLong * 400 + i, rng.nextInt(1 << 14), rng.nextInt(1 << 15))
-    }.distinct
-    val df = rows.toDF("d", "p1", "p2")
-    def run(max: Long) = DenseId.withDenseIdProbed3(df, "id", "d", "p1", "p2", maxDriverKeys = max)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSeq
-    assert(run(0L) == run(32000000L))
-  }
-
-  test("withDenseIdProbed: NULL keys fall back to the classic NULLS-FIRST order") {
-    import spark.implicits._
-    val df = Seq(
-      (Some(5L), Some(1)), (None, Some(2)), (Some(1L), None), (Some(2L), Some(0)))
-      .toDF("d", "p")
-    val probed = DenseId.withDenseIdProbed(df, "id", "d", "p")
-      .orderBy("id").collect().map(r => (r.isNullAt(0), r.isNullAt(1), r.getLong(2))).toSeq
-    val classic = DenseId.withDenseId(df, "id", col("d"), col("p"))
-      .orderBy("id").collect().map(r => (r.isNullAt(0), r.isNullAt(1), r.getLong(2))).toSeq
-    assert(probed == classic) // a NULL key must trigger the fallback, never rank as 0
   }
 
   // ---- MtbDataset pair-frequency filter: broadcast vs distributed semi join ----

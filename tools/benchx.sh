@@ -4,7 +4,7 @@
 # Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BATTERY_REPS,
 #      SPARK_GRAFT_NOOP, SPARK_GRAFT_EXPLAIN_DIR
 set -euo pipefail
-export SPARK_DRIVER_MEM="${SPARK_DRIVER_MEM:-24g}"
+GRAFT_DEFAULT_MEM=24g # capped at half of MemTotal by graft-env.sh
 . "$(dirname "$0")/graft-env.sh"
 graft_ensure_compiled
 graft_java graft.tools.BenchExtra "$@"

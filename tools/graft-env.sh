@@ -1,5 +1,5 @@
 # Shared launcher environment for running graft mains WITHOUT sbt.
-# Sourced by tools/verify.sh and tools/bench.sh.
+# Sourced by tools/verify.sh, tools/bench.sh and tools/benchx.sh.
 #
 # Why this exists: sbt holds a per-project lock, so a correctness pass
 # queued behind a long benchmark (or vice versa) can time out at the
@@ -35,10 +35,24 @@ for p in java.base/java.lang java.base/java.lang.invoke \
   GRAFT_ADD_OPENS="$GRAFT_ADD_OPENS --add-opens=$p=ALL-UNNAMED"
 done
 
+# SPARK_DRIVER_MEM sets the heap. Unset, the launcher's default
+# (GRAFT_DEFAULT_MEM, which each launcher sets before sourcing this file) is
+# capped at half of MemTotal, so a heap sized for a big box still commits.
+graft_default_mem() {
+  local want="${1%g}" half
+  half=$(awk '/^MemTotal:/ {print int($2 / 2097152)}' /proc/meminfo 2>/dev/null)
+  if [ -n "$half" ] && [ "$half" -ge 1 ] && [ "$half" -lt "$want" ]; then want=$half; fi
+  echo "${want}g"
+}
+GRAFT_MEM="${SPARK_DRIVER_MEM:-$(graft_default_mem "$GRAFT_DEFAULT_MEM")}"
+
+# local[N] for the mains: every core this host has unless SPARK_GRAFT_CPUS
+# says otherwise
+export SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+
 # Firecracker microVM: first-touch page faults are ~100x bare metal, so an
 # adaptively-growing heap burns cores in the kernel. Fixed pre-touched heap
 # (same flags as build.sbt's forked run).
-GRAFT_MEM="${SPARK_DRIVER_MEM:-12g}"
 GRAFT_JVM_FLAGS="-XX:+UseParallelGC -XX:+AlwaysPreTouch -XX:-UseAdaptiveSizePolicy -Xms$GRAFT_MEM -Xmx$GRAFT_MEM -Xlog:gc -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC"
 
 graft_java() {

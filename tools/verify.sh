@@ -9,6 +9,7 @@
 # Then compare against DuckDB exactly like the driver:
 #   python3 tools/check_oracle.py <sfDir> <outDir>
 set -euo pipefail
+GRAFT_DEFAULT_MEM=12g # capped at half of MemTotal by graft-env.sh
 . "$(dirname "$0")/graft-env.sh"
 graft_ensure_compiled
 sf="${1:-/root/testdata/sf0.01}"
