@@ -90,7 +90,14 @@ object Markers {
     * HashMap is consulted once per DISTINCT token, not once per emitted
     * wordpiece per statement (the tokenize stage re-encodes a near-closed
     * vocabulary; this is the hot allocation path of the wide chain). */
-  final case class TokPieces(pieces: Array[String], ids: Array[Int])
+  final case class TokPieces(pieces: Array[String], ids: Array[Int]) {
+    /** Some piece equals a marker string (a word such as `pre[E1]post`):
+      * the only case in which marker positions must be found by scanning. */
+    val hasMarker: Boolean = pieces.exists(isMarker)
+  }
+
+  private def isMarker(p: String): Boolean =
+    p == BertVocab.E1 || p == BertVocab.E1End || p == BertVocab.E2 || p == BertVocab.E2End
 
   /** Tokenize the marker-bearing string and relocate spans to wordpiece
     * coordinates, inside the marker pairs: (e1_s+1, e1_e-1). Rows whose
@@ -102,49 +109,103 @@ object Markers {
       e2: Span): Option[Encoded] =
     encodeCached(tokenizer, null)(tokens, e1, e2)
 
-  /** encode with per-partition memoization: tokenize(" ".join(ts)) equals
-    * the concatenation of tokenize(t) per element (tokens contain no
-    * whitespace, and atomic markers cannot span a joined boundary), so each
-    * distinct surface tokenizes (and id-converts) once per partition
-    * instead of once per statement. Marker positions are found during the
-    * single append scan — first value-equal occurrence, exactly
-    * `buf.indexOf` semantics — instead of four post-hoc list scans. */
+  /** [[encode]] with a per-partition wordpiece memo: the one-window case of
+    * [[DocEncoder]], whose scaladoc carries the equivalence argument. */
   def encodeCached(
       tokenizer: BertTokenizer,
       cache: java.util.HashMap[String, TokPieces])(
       tokens: scala.collection.Seq[String],
       e1: Span,
-      e2: Span): Option[Encoded] = {
-    val withMarkers = addSpecialTokens(tokens, e1, e2)
-    var e1s = -1; var e1e = -1; var e2s = -1; var e2e = -1
-    val ids = new scala.collection.mutable.ArrayBuilder.ofInt
-    ids.sizeHint(withMarkers.length + 8)
-    var n = 0
-    withMarkers.foreach { t =>
-      var tp = if (cache == null) null else cache.get(t)
-      if (tp == null) {
-        val pcs = tokenizer.tokenize(t).toArray
-        val idArr = new Array[Int](pcs.length)
-        var i = 0
-        while (i < pcs.length) { idArr(i) = tokenizer.convertTokenToId(pcs(i)); i += 1 }
-        tp = TokPieces(pcs, idArr)
-        if (cache != null) cache.put(t, tp)
-      }
-      val pcs = tp.pieces
-      var i = 0
-      while (i < pcs.length) {
-        val p = pcs(i)
-        // the four marker strings are pairwise distinct, so at most one
-        // branch can match; "first occurrence wins" == indexOf semantics
-        if (e1s < 0 && p == BertVocab.E1) e1s = n
-        else if (e1e < 0 && p == BertVocab.E1End) e1e = n
-        else if (e2s < 0 && p == BertVocab.E2) e2s = n
-        else if (e2e < 0 && p == BertVocab.E2End) e2e = n
-        i += 1; n += 1
-      }
-      ids.addAll(tp.ids)
+      e2: Span): Option[Encoded] =
+    new DocEncoder(tokenizer, cache, tokens).encode(0, tokens.length, e1, e2)
+
+  /** The encoder of every pair window of one document. Each token resolves
+    * to its [[TokPieces]] at most once, on first use, through the optional
+    * per-partition memo (`cache`, may be null); a window's ids are then
+    * array copies of its tokens' ids with the six special ids written
+    * between them.
+    *
+    * Equivalence with the reference (`tokenize(" ".join(addSpecialTokens(
+    * window)))` then the first `indexOf` of each marker): BasicTokenizer
+    * splits on whitespace and the atomic added tokens contain none, so
+    * tokenizing the joined string equals concatenating the tokenization of
+    * each element — also for merged mentions such as "acme corp", whose
+    * inner space splits them the same way in both. An inserted marker
+    * tokenizes to itself, so its position is counted during the copy. A
+    * document token whose pieces equal a marker string (`pre[E1]post`) can
+    * come first, so such tokens — and only they — have their pieces scanned
+    * and the first occurrence wins, exactly `indexOf` semantics. */
+  final class DocEncoder(
+      tokenizer: BertTokenizer,
+      cache: java.util.HashMap[String, TokPieces],
+      tokens: scala.collection.Seq[String]) {
+
+    private val toks: scala.collection.IndexedSeq[String] = tokens match {
+      case ix: scala.collection.IndexedSeq[String] => ix
+      case other => other.toIndexedSeq
     }
-    if (e1s < 0 || e1e < 0 || e2s < 0 || e2e < 0) None
-    else Some(Encoded(ids.result(), Span(e1s + 1, e1e - 1), Span(e2s + 1, e2e - 1)))
+    private val resolved = new Array[TokPieces](toks.length)
+
+    private def pieces(i: Int): TokPieces = {
+      var tp = resolved(i)
+      if (tp == null) {
+        val t = toks(i)
+        tp = if (cache == null) null else cache.get(t)
+        if (tp == null) {
+          val pcs = tokenizer.tokenize(t).toArray
+          tp = TokPieces(pcs, pcs.map(tokenizer.convertTokenToId))
+          if (cache != null) cache.put(t, tp)
+        }
+        resolved(i) = tp
+      }
+      tp
+    }
+
+    /** The window `tokens[from, until)` with inclusive entity spans in
+      * document coordinates: [[encode]] of the sliced window with the spans
+      * shifted by `from`. */
+    def encode(from: Int, until: Int, e1: Span, e2: Span): Option[Encoded] = {
+      var len = 2 // [CLS] ... [SEP]
+      var i = from
+      while (i < until) {
+        len += pieces(i).ids.length
+        if (i == e1.start) len += 1
+        if (i == e2.start) len += 1
+        if (i == e1.end) len += 1
+        if (i == e2.end) len += 1
+        i += 1
+      }
+      val ids = new Array[Int](len)
+      ids(0) = tokenizer.clsId
+      var n = 1
+      var e1s = -1; var e1e = -1; var e2s = -1; var e2e = -1
+      i = from
+      while (i < until) {
+        if (i == e1.start) { if (e1s < 0) e1s = n; ids(n) = tokenizer.e1Id; n += 1 }
+        if (i == e2.start) { if (e2s < 0) e2s = n; ids(n) = tokenizer.e2Id; n += 1 }
+        val tp = pieces(i)
+        if (tp.hasMarker) {
+          // the four marker strings are pairwise distinct, so at most one
+          // branch can match; "first occurrence wins" == indexOf semantics
+          var k = 0
+          while (k < tp.pieces.length) {
+            val p = tp.pieces(k)
+            if (e1s < 0 && p == BertVocab.E1) e1s = n + k
+            else if (e1e < 0 && p == BertVocab.E1End) e1e = n + k
+            else if (e2s < 0 && p == BertVocab.E2) e2s = n + k
+            else if (e2e < 0 && p == BertVocab.E2End) e2e = n + k
+            k += 1
+          }
+        }
+        System.arraycopy(tp.ids, 0, ids, n, tp.ids.length)
+        n += tp.ids.length
+        if (i == e1.end) { if (e1e < 0) e1e = n; ids(n) = tokenizer.e1EndId; n += 1 }
+        if (i == e2.end) { if (e2e < 0) e2e = n; ids(n) = tokenizer.e2EndId; n += 1 }
+        i += 1
+      }
+      ids(n) = tokenizer.sepId
+      if (e1s < 0 || e1e < 0 || e2s < 0 || e2e < 0) None
+      else Some(Encoded(ids, Span(e1s + 1, e1e - 1), Span(e2s + 1, e2e - 1)))
+    }
   }
 }

@@ -1,7 +1,5 @@
 package graft.statements
 
-import scala.collection.mutable.ArrayBuffer
-
 import graft.schema.{AnnotatedDoc, Span}
 
 /** Entity-pair windowing — exact port of the reference's relation-statement
@@ -62,12 +60,16 @@ object Windowing {
     } else len
   }
 
+  /** One pair window in document coordinates: the tokens `[from, until)`,
+    * the two inclusive entity spans and the two entity surfaces. */
+  final case class Window(from: Int, until: Int, e1: Span, e2: Span, t1: String, t2: String) {
+    def tokens(doc: AnnotatedDoc): Seq[String] = doc.tokens.slice(from, until)
+    def localE1: Span = Span(e1.start - from, e1.end - from)
+    def localE2: Span = Span(e2.start - from, e2.end - from)
+  }
+
   /** `_resolve_entities` for one ordered mention pair. Spans inclusive. */
-  def resolve(
-      doc: AnnotatedDoc,
-      i1: Int,
-      i2: Int,
-      windowSize: Int): Option[(Seq[String], Span, Span, String, String)] = {
+  def resolve(doc: AnnotatedDoc, i1: Int, i2: Int, windowSize: Int): Option[Window] = {
     if (i1 == i2) return None
     val m1 = doc.mentions(i1)
     val m2 = doc.mentions(i2)
@@ -82,41 +84,40 @@ object Windowing {
     val rStart = findSentStart(doc.isPunct, e1start)
     val rEnd = findSentEnd(doc.isSentEnd, e2end, len)
     if (rEnd - rStart > windowSize) return None
-    val x = doc.tokens.slice(rStart, rEnd)
     // reference raises ValueError on empty entities/spans; our engine drops
     // the row (counted upstream) — fixtures never trigger it
-    if (m1.text.isEmpty || m2.text.isEmpty || x.forall(_.isEmpty)) return None
-    Some(
-      (
-        x,
-        Span(e1start - rStart, e1end - rStart),
-        Span(e2start - rStart, e2end - rStart),
-        m1.text,
-        m2.text))
+    if (m1.text.isEmpty || m2.text.isEmpty || (rStart until rEnd).forall(doc.tokens(_).isEmpty))
+      return None
+    Some(Window(rStart, rEnd, Span(e1start, e1end), Span(e2start, e2end), m1.text, m2.text))
   }
 
-  /** All relation statements of one document: ordered product of the
-    * deduped mentions (directed edges of the mention graph). */
-  def statements(doc: AnnotatedDoc, docOrd: Long, windowSize: Int = 40): Seq[StatementRow] = {
-    val out = ArrayBuffer.empty[StatementRow]
+  /** Every pair window of one document, in pair order: the ordered product
+    * of the deduped mentions (directed edges of the mention graph). A
+    * window's index is its statement's `pairOrd`. */
+  def windows(doc: AnnotatedDoc, windowSize: Int = 40): IndexedSeq[Window] = {
+    val out = IndexedSeq.newBuilder[Window]
     val n = doc.mentions.length
-    var pairOrd = 0
     var i = 0
     while (i < n) {
       var j = 0
       while (j < n) {
-        resolve(doc, i, j, windowSize) match {
-          case Some((x, s1, s2, e1, e2)) =>
-            out += StatementRow(
-              doc.url, docOrd, pairOrd, x,
-              s1.start, s1.end, s2.start, s2.end, e1, e2)
-            pairOrd += 1
-          case None => ()
-        }
+        resolve(doc, i, j, windowSize).foreach(out += _)
         j += 1
       }
       i += 1
     }
-    out.toSeq
+    out.result()
+  }
+
+  /** All relation statements of one document: [[windows]] sliced to their
+    * tokens, with window-local spans. */
+  def statements(doc: AnnotatedDoc, docOrd: Long, windowSize: Int = 40): Seq[StatementRow] = {
+    val ws = windows(doc, windowSize)
+    ws.indices.map { pairOrd =>
+      val w = ws(pairOrd)
+      val s1 = w.localE1
+      val s2 = w.localE2
+      StatementRow(doc.url, docOrd, pairOrd, w.tokens(doc), s1.start, s1.end, s2.start, s2.end, w.t1, w.t2)
+    }
   }
 }

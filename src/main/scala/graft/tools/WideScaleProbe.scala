@@ -2,6 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
+import graft.obs.PhaseListener
+
 /** Phase-timed runs of the wide (shuffle-heavy) MTB chain for the
   * scaling legs of Bench and WideBench. */
 object WideScaleProbe {
@@ -26,17 +28,22 @@ object WideScaleProbe {
     // mapPartitions) — so construct AND force inside the timed window.
     // Before round 5 the probe timed only count() on a pre-built DataFrame
     // and those construction jobs fell between the windows untimed.
-    graft.statements.MtbDataset.build(
-      s, pages,
-      sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
-      sc.broadcast(graft.tokenize.Vocab.fixtureTokenizer),
-      minCount = 2, minPoolSize = 2,
-      probe = (name, thunk) => {
-        val t0 = System.nanoTime()
-        val c = thunk().count()
-        buf += name -> (System.nanoTime() - t0) / 1e9
-        if (name == "pools") pools = c
-      })
+    // each phase's jobs carry its name as the job-local phase label that
+    // [[phasedRunCpuOn]]'s listener attributes by; jobs outside every phase
+    // are "residual"
+    PhaseListener.withPhase(sc, "residual") {
+      graft.statements.MtbDataset.build(
+        s, pages,
+        sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
+        sc.broadcast(graft.tokenize.Vocab.fixtureTokenizer),
+        minCount = 2, minPoolSize = 2,
+        probe = (name, thunk) => PhaseListener.withPhase(sc, name) {
+          val t0 = System.nanoTime()
+          val c = thunk().count()
+          buf += name -> (System.nanoTime() - t0) / 1e9
+          if (name == "pools") pools = c
+        })
+    }
     // residual = plan construction/analysis between stage windows; a large
     // residual would mean a stage is doing untimed work again — kept as an
     // always-present phase so the artifact self-audits (hi-leg residual
@@ -50,9 +57,9 @@ object WideScaleProbe {
   /** Per-phase task-metric totals captured alongside the wall times:
     * cpuSec = executorCpuTime (actual on-CPU nanoseconds, which on this
     * kernel INCLUDES memory-stall cycles), runSec = executorRunTime.
-    * Attribution: phases run sequentially with a count() barrier, so each
-    * completed stage is credited to the phase active when it completes
-    * (listener-async slop of a few ms is noise at these phase lengths). */
+    * Attribution: each stage is credited to the phase whose job launched
+    * it ([[graft.obs.PhaseListener]]); work outside every phase is
+    * "residual". */
   final case class PhasedCpu(
       wall: Seq[(String, Double)],
       pools: Long,
@@ -70,46 +77,13 @@ object WideScaleProbe {
   def phasedRunCpuOn(
       s: SparkSession,
       pages: org.apache.spark.sql.Dataset[graft.schema.WebPage]): PhasedCpu = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-    @volatile var current = "residual"
-    val cpuNs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    val runMs = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-    val listener = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          cpuNs.merge(current, m.executorCpuTime, (a, b) => a + b)
-          runMs.merge(current, m.executorRunTime, (a, b) => a + b)
-        }
-      }
-    }
-    s.sparkContext.addSparkListener(listener)
     val sc = s.sparkContext
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
-    var pools = 0L
-    val w0 = System.nanoTime()
-    graft.statements.MtbDataset.build(
-      s, pages,
-      sc.broadcast(new graft.annotate.Gazetteer(graft.fixtures.FixtureVocab.AllEntities)),
-      sc.broadcast(graft.tokenize.Vocab.fixtureTokenizer),
-      minCount = 2, minPoolSize = 2,
-      probe = (name, thunk) => {
-        current = name
-        val t0 = System.nanoTime()
-        val c = thunk().count()
-        buf += name -> (System.nanoTime() - t0) / 1e9
-        if (name == "pools") pools = c
-      })
-    current = "residual"
-    val wall = (System.nanoTime() - w0) / 1e9
-    buf += "residual" -> math.max(0.0, wall - buf.map(_._2).sum)
-    Thread.sleep(500) // drain listener-bus stage-completed events
-    s.sparkContext.removeSparkListener(listener)
-    s.catalog.clearCache()
-    import scala.jdk.CollectionConverters._
-    PhasedCpu(
-      buf.toSeq, pools,
-      cpuNs.asScala.map { case (k, v) => k -> v.toDouble / 1e9 }.toMap,
-      runMs.asScala.map { case (k, v) => k -> v.toDouble / 1e3 }.toMap)
+    val listener = new PhaseListener
+    sc.addSparkListener(listener)
+    try {
+      val (wall, pools) = phasedRunOn(s, pages)
+      listener.drain(sc)
+      PhasedCpu(wall, pools, listener.cpuSec, listener.runSec)
+    } finally sc.removeSparkListener(listener)
   }
 }

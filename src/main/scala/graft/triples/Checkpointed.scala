@@ -37,17 +37,21 @@ object Checkpointed {
         .toDF()
     }
 
+    // Inference.classify's length-sorted batches, keyed by (id, url): `id`
+    // alone is not unique, because two urls whose `stableDocOrd` hashes
+    // collide share it
     val scored = mgr.stage("scored") {
-      Inference
-        .classify(
-          spark,
-          statements
-            .select(col("id"), col("tokenIds"), col("e1Start"), col("e2Start"))
-            .as[Inference.ScoreInput],
-          kernel,
-          tokenizer.value.padId,
-          cfg.batchSize)
-        .toDF()
+      val padId = tokenizer.value.padId
+      statements
+        .select(col("id"), col("url"), col("tokenIds"), col("e1Start"), col("e2Start"))
+        .as[(Long, String, Seq[Int], Int, Int)]
+        .sortWithinPartitions(size(col("tokenIds")))
+        .mapPartitions { rows =>
+          Inference.scoreBatches(rows, kernel.value, padId, cfg.batchSize, Inference.MaxSeqLen)(r =>
+            (r._3.toArray, r._4, r._5))
+            .map { case (r, pred) => (r._1, r._2, pred) }
+        }
+        .toDF("id", "url", "pred")
     }
 
     val entries = idx2rel.value.toSeq.sortBy(_._1)
@@ -56,7 +60,7 @@ object Checkpointed {
       statements
         .select(col("id"), col("e1"), col("e2"), col("url"))
         .join(scored.withColumn("pred_label", element_at(labels, col("pred") + 1))
-          .select(col("id"), col("pred_label")), Seq("id"))
+          .select(col("id"), col("url"), col("pred_label")), Seq("id", "url"))
         .select(
           col("e1").as("subj"),
           col("pred_label").as("pred"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.annotate.{Annotator, Gazetteer}
 import graft.kernel.{Inference, ScoringKernel}
-import graft.schema.{Span, Triple, WebPage}
+import graft.schema.{Triple, WebPage}
 import graft.statements.{Markers, Windowing}
 import graft.tokenize.BertTokenizer
 
@@ -127,7 +127,9 @@ object TriplePipeline {
       .select(col("url"), col("text_norm"))
   }
 
-  /** pages → encoded, kernel-ready statements. One narrow flatMap chain. */
+  /** pages → encoded, kernel-ready statements. One narrow mapPartitions
+    * with the same per-document encoder and per-partition wordpiece memo
+    * as the fused [[run]]. */
   def encodedStatements(
       spark: SparkSession,
       pages: Dataset[WebPage],
@@ -137,22 +139,42 @@ object TriplePipeline {
     import spark.implicits._
     normalizePages(pages, cfg)
       .as[(String, String)]
-      .flatMap { case (url, textNorm) =>
-        val doc = filterMentions(Annotator.annotate(url, textNorm, gaz.value), cfg)
-        val docOrd = stableDocOrd(url)
-        Windowing.statements(doc, docOrd, cfg.windowSize).iterator.flatMap { st =>
-          Markers
-            .encode(tokenizer.value)(
-              st.tokens,
-              Span(st.e1s, st.e1e),
-              Span(st.e2s, st.e2e))
-            .map { enc =>
-              ScoredStatement(
-                st.url, st.docOrd, st.pairOrd, st.e1, st.e2,
-                enc.tokenIds.toSeq, enc.e1Span.start, enc.e2Span.start)
-            }
+      .mapPartitions { rows =>
+        val tok = tokenizer.value
+        val cache = new java.util.HashMap[String, Markers.TokPieces](4096)
+        rows.flatMap { case (url, textNorm) =>
+          val docOrd = stableDocOrd(url)
+          encodeDoc(url, textNorm, gaz.value, tok, cache, cfg).map { case (pairOrd, w, enc) =>
+            ScoredStatement(
+              url, docOrd, pairOrd, w.t1, w.t2,
+              enc.tokenIds.toSeq, enc.e1Span.start, enc.e2Span.start)
+          }
         }
       }
+  }
+
+  /** Annotates one normalized page and encodes its pair windows:
+    * `(pairOrd, window, encoded)` for every window whose markers survive.
+    * Windows are document index ranges, so each token's wordpieces resolve
+    * once per document (through the partition's memo) and every window is
+    * assembled by array copy instead of re-tokenizing its statement. */
+  private def encodeDoc(
+      url: String,
+      textNorm: String,
+      gaz: Gazetteer,
+      tok: BertTokenizer,
+      cache: java.util.HashMap[String, Markers.TokPieces],
+      cfg: Config): Iterator[(Int, Windowing.Window, Markers.Encoded)] = {
+    val doc = filterMentions(Annotator.annotate(url, textNorm, gaz), cfg)
+    val windows = Windowing.windows(doc, cfg.windowSize)
+    if (windows.isEmpty) Iterator.empty
+    else {
+      val enc = new Markers.DocEncoder(tok, cache, doc.tokens)
+      Iterator.range(0, windows.length).flatMap { pairOrd =>
+        val w = windows(pairOrd)
+        enc.encode(w.from, w.until, w.e1, w.e2).map(e => (pairOrd, w, e))
+      }
+    }
   }
 
   /** Stable per-document order key derived from the url — reproducible
@@ -186,8 +208,6 @@ object TriplePipeline {
       idx2rel: Broadcast[Map[Int, String]],
       cfg: Config = Config()): Dataset[Triple] = {
     import spark.implicits._
-    val batchSize = cfg.batchSize
-    val windowSize = cfg.windowSize
     normalizePages(pages, cfg)
       .as[(String, String)]
       .mapPartitions { rows =>
@@ -197,35 +217,16 @@ object TriplePipeline {
         val k = kernel.value
         val labels = idx2rel.value
         val tok = tokenizer.value
-        val padId = tok.padId
         // per-partition wordpiece memo: statement windows draw from a
         // near-closed token vocabulary, so each surface tokenizes (and
         // id-converts) once
         val cache = new java.util.HashMap[String, Markers.TokPieces](4096)
         val statements = rows.flatMap { case (url, textNorm) =>
-          val doc = filterMentions(Annotator.annotate(url, textNorm, gaz.value), cfg)
-          Windowing.statements(doc, stableDocOrd(url), windowSize).iterator.flatMap { st =>
-            Markers
-              .encodeCached(tok, cache)(st.tokens, Span(st.e1s, st.e1e), Span(st.e2s, st.e2e))
-              .map(enc => (st.e1, st.e2, url, enc.tokenIds, enc.e1Span.start, enc.e2Span.start))
-          }
+          encodeDoc(url, textNorm, gaz.value, tok, cache, cfg).map { case (_, w, enc) => (w, url, enc) }
         }
-        statements.grouped(batchSize).flatMap { group =>
-          val batch = group.toArray
-          val maxLen = if (batch.isEmpty) 0 else batch.map(_._4.length).max
-          val padded = batch.map { r =>
-            val ids = r._4
-            val out =
-              if (ids.length == maxLen) ids
-              else ids ++ Array.fill(maxLen - ids.length)(padId)
-            (out, r._5, r._6)
-          }
-          val logits = k.scoreBatch(padded)
-          batch.indices.map { i =>
-            val r = batch(i)
-            Triple(r._1, labels(graft.kernel.StubKernel.argmax(logits(i))), r._2, r._3)
-          }
-        }
+        Inference.scoreBatches(statements, k, tok.padId, cfg.batchSize)(r =>
+          (r._3.tokenIds, r._3.e1Span.start, r._3.e2Span.start))
+          .map { case ((w, url, _), pred) => Triple(w.t1, labels(pred), w.t2, url) }
       }
   }
 }

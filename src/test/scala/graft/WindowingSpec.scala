@@ -60,9 +60,9 @@ class WindowingSpec extends AnyFunSuite {
     // normal case: punct at idx2 -> window starts at 3 (reference: start+2)
     val tokens = Seq("w", "w", ".", "the", "cat", "sat", "on", "mat", ".", "tail")
     val d = doc(tokens, Seq(Mention(4, 4, "cat", "T"), Mention(7, 7, "mat", "T")))
-    val Some((x, s1, s2, _, _)) = Windowing.resolve(d, 0, 1, 40)
-    assert(x == Seq("the", "cat", "sat", "on", "mat", "."))
-    assert(s1 == Span(1, 1) && s2 == Span(4, 4))
+    val Some(w) = Windowing.resolve(d, 0, 1, 40)
+    assert(w.tokens(d) == Seq("the", "cat", "sat", "on", "mat", "."))
+    assert(w.localE1 == Span(1, 1) && w.localE2 == Span(4, 4))
   }
 
   test("left-bound quirk: punct at index 1 pulls window start to 0") {
@@ -70,9 +70,9 @@ class WindowingSpec extends AnyFunSuite {
     // so the window INCLUDES the previous fragment and its punct
     val tokens = Seq("intro", ".", "the", "cat", "sat", "on", "mat", ".", "tail")
     val d = doc(tokens, Seq(Mention(3, 3, "cat", "T"), Mention(6, 6, "mat", "T")))
-    val Some((x, s1, s2, _, _)) = Windowing.resolve(d, 0, 1, 40)
-    assert(x == Seq("intro", ".", "the", "cat", "sat", "on", "mat", "."))
-    assert(s1 == Span(3, 3) && s2 == Span(6, 6))
+    val Some(w) = Windowing.resolve(d, 0, 1, 40)
+    assert(w.tokens(d) == Seq("intro", ".", "the", "cat", "sat", "on", "mat", "."))
+    assert(w.localE1 == Span(3, 3) && w.localE2 == Span(6, 6))
   }
 
   test("window longer than windowSize rejected even when gap fits") {
